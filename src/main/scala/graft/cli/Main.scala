@@ -153,6 +153,9 @@ object Main {
           res.detailed, res.queryStats, res.nonSlow, res.errors)),
           args.csv, args.xlsx, args.html)
       case "mysql" =>
+        // parseEntries persists the parsed table, so the five actions
+        // below (isEmpty, count, warnings, two sheets) share one ingest
+        // and one kernel pass, as the mongo branch shares analyze's scan
         val entries =
           if (args.scale) Sources.readDelimited(spark, args.input)
             .selectExpr("cast(0 as long) as file_id", "entry_no",

@@ -172,11 +172,19 @@ object Sources {
     * One row per file: (file_id, content). Only for small-file parity runs —
     * a single 100 TB record is the scale-killer SURVEY.md §7.2 flags; the
     * scale path is [[readDelimited]].
+    *
+    * `file_id` is dense and 0-based in file-name order, the order
+    * [[readDelimited]] numbers entries in: a window over the one row per
+    * file. It must stay below 2^31, since
+    * [[graft.engine.mysql.MySqlLogPipeline.entriesFromFiles]] builds its
+    * order key as `file_id * 2^32 + pos`.
     */
   def readWholeFile(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
     spark.read.option("wholetext", "true").text(path)
-      .select(monotonically_increasing_id().as("file_id"), col("value").as("content"))
+      .select(input_file_name().as("file"), col("value").as("content"))
+      .select((row_number().over(Window.orderBy(col("file"))) - 1L).as("file_id"),
+        col("content"))
   }
 
   /** S3 for MySQL: in-memory whole-log string. */

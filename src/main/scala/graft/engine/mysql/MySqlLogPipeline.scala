@@ -2,6 +2,7 @@ package graft.engine.mysql
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** MySQL/Percona slow-query-log analyzer, re-expressed as a declarative
   * Spark dataflow (reference behavior: /root/reference/MySql/mysqlLogParser.py:16-134).
@@ -11,12 +12,13 @@ import org.apache.spark.sql.functions._
   * empty-query placeholder (P12) + fingerprint (F2) → detailed table +
   * per-pattern aggregate (A3) + warnings channel (E2).
   *
-  * Everything is Catalyst expressions — the codegen'd fused
-  * [[graft.engine.expr.NativeFunctions.RegexFindGroup]] (one regex
-  * execution yields both the match flag and the capture; rlike +
-  * regexp_extract would run each pattern twice), try_cast, min_by — so
-  * the whole parse is one WholeStageCodegen span per
-  * branch and the only shuffle is the aggregate's groupBy. At scale, input
+  * The parse is one persisted table: [[projectedOf]] runs the fused
+  * [[graft.engine.expr.NativeFunctions.MySqlEntryFields]] kernel (one
+  * compiled scan per entry yields all seven captures) plus try_cast and
+  * the completeness gate, and [[parseEntries]] persists that table for a
+  * batch input, so detailed, aggregate and warnings — and every report
+  * action that reads them — share one ingest and one kernel pass, as the
+  * reference parses once and writes every sheet from memory. At scale, input
   * arrives pre-split as entry records ([[graft.engine.ingest.Sources.readDelimited]])
   * rather than whole-file strings.
   */
@@ -58,11 +60,22 @@ object MySqlLogPipeline {
 
   /** Entry records → detailed + aggregate + warnings.
     * Input: (file_id, entry_no, ord, entry).
+    *
+    * A batch input's [[projectedOf]] table is persisted (MEMORY_AND_DISK,
+    * as [[graft.engine.mongo.MongoLogPipeline.analyze]] persists its
+    * scan), so all three outputs, and every action on them, read one
+    * ingest and one kernel pass; the cache lives until the session stops
+    * or its cache is cleared. A streaming input keeps its plain plan — a
+    * streaming Dataset cannot be cached.
     */
-  def parseEntries(entries: DataFrame): Result =
-    resultFromProjected(projectedOf(entries))
+  def parseEntries(entries: DataFrame): Result = {
+    val projected = projectedOf(entries)
+    resultFromProjected(
+      if (entries.isStreaming) projected
+      else projected.persist(StorageLevel.MEMORY_AND_DISK))
+  }
 
-  /** The parse's one expensive pass — the 7-regex battery + field
+  /** The parse's one expensive pass — the fused field kernel + field
     * projection over every entry — separated (r16) so the registry can
     * materialize it ONCE per (session, corpus) and serve all three
     * outputs from it ([[resultFromProjected]]): detailed, aggregate and

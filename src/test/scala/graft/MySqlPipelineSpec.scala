@@ -214,4 +214,95 @@ class MySqlPipelineSpec extends SparkTestBase {
     val res = MySqlLogPipeline.parse(Sources.fromContent(spark, ""))
     assert(res.detailed.isEmpty && res.aggregate.isEmpty && res.warnings.isEmpty)
   }
+
+  private def slowEntry(i: Int, query: String): String =
+    s"""# Time: 231026 13:00:0$i
+       |# User@Host: u$i[u] @ h [ip] thread_id: $i
+       |# Query_time: 0.$i Lock_time: 0.0 Rows_sent: 1 Rows_examined: 1
+       |SET timestamp=$i;
+       |$query
+       |""".stripMargin
+
+  /** A two-file log directory: a preamble, a literal twin split across
+    * the files (its sample must come from a.log, the first by name), and
+    * an incomplete entry for the warning channel. b.log is the larger
+    * file, so Spark's size-descending split order is not file order.
+    */
+  private def twoFileDir(prefix: String): java.io.File = {
+    val dir = new java.io.File(
+      java.nio.file.Files.createTempDirectory(prefix).toFile, "logs")
+    dir.mkdir()
+    java.nio.file.Files.writeString(new java.io.File(dir, "a.log").toPath,
+      "Tcp port: 3306\n" + slowEntry(1, "SELECT * FROM t WHERE id = 1;"))
+    java.nio.file.Files.writeString(new java.io.File(dir, "b.log").toPath,
+      slowEntry(2, "SELECT * FROM t WHERE id = 2;") +
+        "# Time: 231026 13:00:03\nSET timestamp=3;\nSELECT 'incomplete';\n" +
+        slowEntry(4, s"SELECT '${"x" * 2000}';"))
+    dir
+  }
+
+  test("whole-file CLI on a multi-file directory writes the --scale report") {
+    spark // force session init so Main's getOrCreate reuses it
+    val dir = twoFileDir("mysql-whole")
+    val whole = new java.io.File(dir.getParentFile, "whole").getAbsolutePath
+    val scale = new java.io.File(dir.getParentFile, "scale").getAbsolutePath
+    val in = dir.getAbsolutePath
+    graft.cli.Main.main(Array("--mode", "mysql", "--input", in, "--output", whole))
+    graft.cli.Main.main(Array("--mode", "mysql", "--input", in, "--output", scale,
+      "--scale"))
+    def sheet(out: String, name: String): Seq[String] =
+      spark.read.parquet(s"$out/$name").collect().map(_.toString).toSeq
+    val detailed = sheet(whole, "Detailed Metrics")
+    assert(detailed.length === 3)
+    assert(detailed.sorted === sheet(scale, "Detailed Metrics").sorted)
+    val agg = spark.read.parquet(s"$whole/Aggregate Results")
+      .orderBy("Normalized_Query").collect().toSeq
+    assert(agg === spark.read.parquet(s"$scale/Aggregate Results")
+      .orderBy("Normalized_Query").collect().toSeq)
+    assert(agg.map(_.getAs[String]("Sample_Query"))
+      .contains("SELECT * FROM t WHERE id = 1;"))
+  }
+
+  test("parseEntries: the five report actions read the input once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import graft.engine.report.ReportSink
+    val dir = twoFileDir("mysql-once")
+    val in = dir.getAbsolutePath
+    val out = new java.io.File(dir.getParentFile, "report").getAbsolutePath
+    // a stage reads the input iff its RDDs include the Hadoop scan,
+    // which newAPIHadoopFile names after the path
+    val inputStages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == in)) inputStages.incrementAndGet()
+    }
+    val res = MySqlLogPipeline.parseEntries(Sources.readDelimited(spark, in)
+      .selectExpr("cast(0 as long) as file_id", "entry_no", "entry_no as ord",
+        "entry"))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // graft.cli.Main's mysql branch, action for action
+      assert(!res.detailed.isEmpty)
+      assert(res.warnings.count() === 1L)
+      ReportSink.writeWarnings(out, res.warnings)
+      val (ok, err) = ReportSink.writeSheets(out, ReportSink.MySqlSheets.zip(Seq(
+        MySqlLogPipeline.referenceDetailed(res.detailed), res.aggregate)))
+      assert(ok, err)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // one pass for the entry-numbering census, one for the data
+    assert(inputStages.get === 2)
+  }
+
+  test("parseEntries on a streaming frame caches nothing") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, Long, Long, String)]
+    spark.catalog.clearCache()
+    val res = MySqlLogPipeline.parseEntries(
+      mem.toDF().toDF("file_id", "entry_no", "ord", "entry"))
+    assert(res.detailed.isStreaming)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }
